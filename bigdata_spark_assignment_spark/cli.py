@@ -75,7 +75,7 @@ def main(argv: Sequence[str] | None = None) -> dict[str, dict[str, float]]:
     pipe = FlightDelayPipeline(
         selector_mode=None if args.selector == "none" else args.selector,
         cv_folds=args.cv_folds)
-    prepared = pipe.prepare(flights, planes).cache()
+    prepared = pipe.prepare(flights, planes)
     models = tuple(m.strip() for m in args.models.split(",") if m.strip())
     metrics = pipe.fit_evaluate(prepared, models=models)
     prepared.unpersist()

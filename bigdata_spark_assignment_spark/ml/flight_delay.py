@@ -23,10 +23,15 @@ with a planted linear signal — is that LR recovers the signal
 (R² ≫ 0) and RMSE lands near the planted noise σ.
 
 100 TB notes: the cleaning chain is narrow except the plane join
-(broadcast — planes is a bounded dimension), the constant-prune and
-imputer aggregates (one shuffle-free single-pass agg each), and
-CV's fold boundaries. StringIndexer collects per-column distinct
-labels to the driver — bounded by categorical cardinality, not data
+(broadcast — planes is a bounded dimension) and two eager global
+aggregates that exchange only one partial row per task: the join
+guard and ONE statistics pass for constant-prune + mode + mean
+imputation (min/max/count/mode/avg; no ``Expand``, no shuffle of data
+rows). The statistics come back as literals, so the cleaned plan
+stays narrow; ``prepare`` caches it once for the indexer and selector
+fits, which run many small jobs each, and CV reads the cached
+prepared table. StringIndexer collects per-column distinct labels to
+the driver — bounded by categorical cardinality, not data
 size. CrossValidator multiplies the training cost by folds×grid;
 ``parallelism`` is exposed so fits run concurrently.
 """
@@ -57,11 +62,9 @@ from ..fixtures import FORBIDDEN_COLUMNS
 from ..operators.cleaning import (
     day_part_expr,
     derived_age_expr,
-    impute_mean,
-    impute_mode,
     na_to_null,
     null_to_unknown,
-    prune_constant_columns,
+    prune_and_impute,
 )
 from ..operators.relational import join_guarded
 
@@ -96,12 +99,18 @@ def clean_flights(flights: DataFrame, planes: DataFrame) -> DataFrame:
     * broadcast-join the planes dimension on TailNum (:136; J1) after
       dropping bare/dirty plane rows (:153,:162);
     * NA→null everywhere, then cast numerics to int (:168-222);
-    * single-pass constant-column prune, force-keeping Year (:184-208);
-    * mode-impute calendar ints, mean-impute continuous ints (:262-275);
+    * constant-column prune, force-keeping Year (:184-208), then
+      mode-impute calendar ints and mean-impute continuous ints
+      (:262-275) — all three from ONE eager statistics aggregate whose
+      results enter the plan as literals (``prune_and_impute``);
     * PlaneAge = Year − year(issue_date) clamped at 0 (:283-285);
     * categorical null→"unknown" (:294-297);
     * drop dirty hhmm rows (>2400, :303) and bucketize times into
       day-part categoricals (:310-311; U3).
+
+    Runs two small eager aggregates (the join guard and the statistics
+    pass); the returned plan is a narrow scan → filter → broadcast
+    join → project with no ``Expand``, ``Window`` or cross join.
     """
     df = flights.drop(*FORBIDDEN_COLUMNS)
     df = df.filter(F.col(LABEL).isNotNull() & (F.col(LABEL) != "NA"))
@@ -119,10 +128,10 @@ def clean_flights(flights: DataFrame, planes: DataFrame) -> DataFrame:
 
     df = na_to_null(df)
     df = df.withColumns({c: F.col(c).cast("int") for c in NUMERIC_COLS})
-    df = prune_constant_columns(df, force_keep=("Year",))
-
-    df = impute_mode(df, [c for c in MODE_IMPUTE_COLS if c in df.columns])
-    df = impute_mean(df, [c for c in MEAN_IMPUTE_COLS if c in df.columns])
+    df = prune_and_impute(
+        df, force_keep=("Year",),
+        mode_cols=[c for c in MODE_IMPUTE_COLS if c in df.columns],
+        mean_cols=[c for c in MEAN_IMPUTE_COLS if c in df.columns])
 
     df = df.withColumn(
         "PlaneAge", derived_age_expr(F.col("Year"), F.col("issue_date"))) \
@@ -183,18 +192,33 @@ class FlightDelayPipeline:
     metrics: dict[str, dict[str, float]] = field(default_factory=dict)
 
     def prepare(self, flights: DataFrame, planes: DataFrame) -> DataFrame:
-        df = featurize(clean_flights(flights, planes))
-        df = df.withColumn(LABEL, F.col(LABEL).cast("double"))
-        if self.selector_mode:
-            selector = UnivariateFeatureSelector(
-                featuresCol="normFeatures", outputCol="selectedFeatures",
-                labelCol=LABEL, selectionMode=self.selector_mode)
-            selector.setFeatureType("continuous").setLabelType("continuous")
-            selector.setSelectionThreshold(self.selection_threshold)
-            df = selector.fit(df).transform(df)
-            self.features_col = "selectedFeatures"
-        else:
-            self.features_col = "normFeatures"
+        """Clean → featurize → select, returned CACHED and materialized.
+
+        The cleaned table is cached once, so the StringIndexer fit and
+        the selector fit (many small jobs) read it instead of
+        re-running CSV parse and plane join each. The final frame is
+        cached and counted before the cleaned cache is released; its
+        buffers are loaded, so that non-cascading ``unpersist`` keeps
+        them. The caller owns the result and must ``unpersist()`` it.
+        """
+        cleaned = clean_flights(flights, planes).cache()
+        try:
+            df = featurize(cleaned)
+            df = df.withColumn(LABEL, F.col(LABEL).cast("double"))
+            if self.selector_mode:
+                selector = UnivariateFeatureSelector(
+                    featuresCol="normFeatures", outputCol="selectedFeatures",
+                    labelCol=LABEL, selectionMode=self.selector_mode)
+                selector.setFeatureType("continuous").setLabelType("continuous")
+                selector.setSelectionThreshold(self.selection_threshold)
+                df = selector.fit(df).transform(df)
+                self.features_col = "selectedFeatures"
+            else:
+                self.features_col = "normFeatures"
+            df = df.cache()
+            df.count()
+        finally:
+            cleaned.unpersist()
         return df
 
     def _estimators(self, which: tuple[str, ...]):

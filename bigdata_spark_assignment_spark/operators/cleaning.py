@@ -9,9 +9,14 @@ Catalyst pushdown through them — and applies them in per-column
 so filters still push down and whole-stage codegen fuses the chain.
 
 100 TB notes: all ops in this module are narrow (no shuffle) except
-``prune_constant_columns`` / ``impute_*`` which each run exactly one
-aggregation over the input (the reference runs 2 shuffle jobs PER
-COLUMN for the prune, ``Main.scala:184-208``).
+the aggregates. ``prune_and_impute`` (and ``prune_constant_columns``,
+built on it) runs ONE eager global aggregate of min/max/count/mode/avg
+partials — no ``Expand``, no shuffle of data rows, one partial row per
+task — and applies the results as literals; the reference runs 2
+shuffle jobs PER COLUMN for the prune (``Main.scala:184-208``). The
+lazy ``impute_mode`` / ``impute_mean`` keep the statistics inside the
+plan (for callers that need ONE lazy plan), so every action re-runs
+their aggregation subplan.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .relational import distinct_count_expr
+from .relational import distinct_count_expr, is_constant_expr
 
 # Reference value lists (``Main.scala:13-25``): tokens normalized to
 # "unknown" (U1) and the missing-data sentinel (U2). "Unknow" is the
@@ -108,13 +113,53 @@ def distinct_counts(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
     return df.agg(*[distinct_count_expr(F.col(c)).alias(c) for c in cols])
 
 
+def prune_and_impute(df: DataFrame, force_keep: Sequence[str] = (),
+                     mode_cols: Sequence[str] = (),
+                     mean_cols: Sequence[str] = ()) -> DataFrame:
+    """P15 + A6 + A5 (``Main.scala:184-275``) from ONE statistics pass:
+    drop every column with ≤1 distinct value (NULL counted as a value,
+    ``is_constant_expr``) except ``force_keep``, then fill the NULLs of
+    ``mode_cols`` with the column mode and of ``mean_cols`` with the
+    column mean.
+
+    One eager global aggregate returns every statistic; they come back
+    as literals (``coalesce(c, lit(stat))``), so the returned plan is
+    the input plan plus one projection — no cross join, window or
+    second aggregation that each downstream action would re-run.
+    Semantics match ``distinct_counts(df) <= 1`` → ``impute_mode`` →
+    ``impute_mean``: the mode breaks ties to the smaller value
+    (``mode(c, deterministic=true)``, as ``mode_of``), a column with no
+    non-null value keeps its NULLs, and a mean-imputed int column
+    becomes ``double`` like ``coalesce(int, avg)``. ``mode_cols`` and
+    ``mean_cols`` must be disjoint; pruned columns are not imputed.
+
+    100 TB notes: min/max/count/avg partials are fixed-size; a mode
+    partial is a value→count map, so mode-impute low-cardinality
+    columns only (the calendar ints: ≤31 values).
+    """
+    cols, mode_cols, mean_cols = df.columns, list(mode_cols), list(mean_cols)
+    stats = df.agg(
+        *[is_constant_expr(F.col(c)).alias(f"__const_{i}")
+          for i, c in enumerate(cols)],
+        *[F.mode(c, deterministic=True).alias(f"__mode_{i}")
+          for i, c in enumerate(mode_cols)],
+        *[F.avg(c).alias(f"__mean_{i}") for i, c in enumerate(mean_cols)])
+    row, n = stats.first(), len(cols)
+    drop = [c for c, const in zip(cols, row) if const and c not in force_keep]
+    # the cast keeps a NULL statistic typed: mode(c) has c's type, and
+    # avg(c) the type the mean fill widens c to
+    return df.drop(*drop).withColumns({
+        c: F.coalesce(F.col(c), F.lit(v).cast(f.dataType))
+        for c, v, f in zip(mode_cols + mean_cols, row[n:],
+                           stats.schema.fields[n:])
+        if c not in drop})
+
+
 def prune_constant_columns(df: DataFrame, force_keep: Sequence[str] = ()) -> DataFrame:
     """P15 (``Main.scala:184-208``): drop every column with ≤1 distinct
     value (nulls counted as a value), except ``force_keep`` (the
     reference force-keeps ``Year``, ``Main.scala:192``)."""
-    counts = distinct_counts(df).first().asDict()
-    drop = [c for c, n in counts.items() if n <= 1 and c not in force_keep]
-    return df.drop(*drop) if drop else df
+    return prune_and_impute(df, force_keep)
 
 
 def impute_mean(df: DataFrame, cols: Sequence[str]) -> DataFrame:

@@ -1,9 +1,10 @@
 """Relational operator helpers (SURVEY.md §2.4-2.6).
 
 These are the engine-level building blocks behind the named queries:
-distinct-count with the reference's null-as-a-group semantics, top-k
-per group, and join conveniences. All pure DataFrame/Column
-compositions — Catalyst sees through every one of them.
+distinct-count (and the cheaper constant-column test) with the
+reference's null-as-a-group semantics, top-k per group, and join
+conveniences. All pure DataFrame/Column compositions — Catalyst sees
+through every one of them.
 """
 
 from __future__ import annotations
@@ -29,14 +30,20 @@ def distinct_count_expr(col: Column) -> Column:
     ).cast("long")
 
 
-def distinct_count(df: DataFrame, col: str | Column) -> int:
-    """Eager form: distinct count (null counted) as a Python int.
+def is_constant_expr(col: Column) -> Column:
+    """Aggregate expression: TRUE iff ``col`` has at most one distinct
+    value, **counting NULL as a value** — i.e. ``distinct_count_expr
+    <= 1`` without the exact distinct count.
 
-    Used for join guards like the reference's ``Main.scala:132-139``
-    (join only if the key has >1 distinct value).
+    ``min <=> max`` over a column with no NULLs, or a column that is
+    all NULL (including zero rows). Only ``min``/``max``/``count``
+    partials cross the network — no ``Expand``, no shuffle of distinct
+    values — and the comparison runs in Spark SQL, so NaN == NaN and
+    -0.0 == 0.0 exactly as ``count_distinct`` groups them.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return df.agg(distinct_count_expr(c).alias("n")).first()["n"]
+    n_set = F.count(col)
+    return (n_set == 0) | (
+        (n_set == F.count(F.lit(1))) & F.min(col).eqNullSafe(F.max(col)))
 
 
 def top_k_per_group(df: DataFrame, group_cols: list[str],
@@ -60,8 +67,9 @@ def join_guarded(fact: DataFrame, dim: DataFrame, on: str,
                  how: str = "inner", broadcast_dim: bool = True) -> DataFrame:
     """Conditional join (J2, ``Main.scala:132-139``): join only when the
     key actually discriminates (>1 distinct value on the fact side);
-    otherwise return the fact unchanged."""
-    if distinct_count(fact, on) <= 1:
+    otherwise return the fact unchanged. The guard is one
+    ``is_constant_expr`` aggregate, not an exact distinct count."""
+    if fact.agg(is_constant_expr(F.col(on))).first()[0]:
         return fact
     right = F.broadcast(dim) if broadcast_dim else dim
     return fact.join(right, on, how)

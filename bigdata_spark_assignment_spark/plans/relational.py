@@ -236,7 +236,7 @@ def agg_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference's idiom is ``groupBy(c).count().groupBy(c).count()
     .count()`` (``Main.scala:133,192``) — two shuffles per column, and
     unlike ``count_distinct`` it counts NULL as a group. Our operator
-    (``operators.relational.distinct_count``) keeps the null-as-a-group
+    (``operators.relational.distinct_count_expr``) keeps the null-as-a-group
     semantics in ONE pass; ``nullif`` manufactures a NULL to prove the
     semantics differ from COUNT(DISTINCT). The part-table block is the
     P15 constant-column-prune decision input (``Main.scala:184-208``):

@@ -65,6 +65,21 @@ def test_prune_constant_columns(spark):
     pruned = prune_constant_columns(df, force_keep=("kept",))
     assert pruned.columns == ["id", "kept"]
 
+    # differential against the exact distinct count (NULL counted as a
+    # value) on the float and NULL corner cases of the min/max test
+    nan = float("nan")
+    edge = spark.createDataFrame(
+        [(nan, -0.0, None, 5, "c", 1),
+         (nan, 0.0, None, None, "c", 2),
+         (nan, 0.0, None, 5, "c", 1)],
+        "all_nan double, signed_zero double, all_null int, "
+        "one_and_null int, const_str string, two int")
+    assert str(edge.first().signed_zero) == "-0.0"
+    exact = distinct_counts(edge).first().asDict()
+    kept = prune_constant_columns(edge).columns
+    assert kept == [c for c in edge.columns if exact[c] > 1]
+    assert kept == ["one_and_null", "two"]
+
 
 def test_prune_constant_columns_empty_input(spark):
     df = spark.createDataFrame([], "a int, b string")

@@ -1,5 +1,6 @@
 """Degenerate-input guards (ADVICE r4): sink parameter validation,
-grouped-OLS on constant columns, and zero-late-row stream replay."""
+grouped-OLS on constant columns, zero-late-row stream replay, and the
+constant-key join guard."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_spark_assignment_spark.io import load_table, write_compacted
+from bigdata_spark_assignment_spark.operators.cleaning import distinct_counts
+from bigdata_spark_assignment_spark.operators.relational import join_guarded
 
 
 def test_write_compacted_rejects_nonpositive_rows_per_file(spark, tmp_path):
@@ -17,6 +20,24 @@ def test_write_compacted_rejects_nonpositive_rows_per_file(spark, tmp_path):
     for bad in (0, -5):
         with pytest.raises(ValueError, match="rows_per_file"):
             write_compacted(df, str(tmp_path / "out"), rows_per_file=bad)
+
+
+@pytest.mark.parametrize("keys,joins", [
+    ([None, None], False),       # all NULL: one distinct value
+    (["a", None, "a"], True),    # one value + NULL: two distinct values
+    (["a", "a", "a"], False),    # one value, no NULL
+    (["a", "b", "a"], True),     # two values
+])
+def test_join_guarded_joins_iff_key_discriminates(spark, keys, joins):
+    """J2 (Main.scala:132-139): join only when the fact key has more
+    than one distinct value, NULL counted as a value."""
+    fact = spark.createDataFrame(list(enumerate(keys)), "i int, k string")
+    dim = spark.createDataFrame([("a", 10), ("b", 20)], "k string, v int")
+    assert (distinct_counts(fact, ["k"]).first().k > 1) == joins
+    out = join_guarded(fact, dim, "k")
+    assert ("v" in out.columns) == joins
+    if not joins:
+        assert sorted(out.collect()) == sorted(fact.collect())
 
 
 def test_q07_grouped_ols_degenerate_groups(spark, sf_smoke, tmp_path):

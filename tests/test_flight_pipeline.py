@@ -23,6 +23,11 @@ from bigdata_spark_assignment_spark.ml.flight_delay import (
     clean_flights,
     featurize,
 )
+from bigdata_spark_assignment_spark.operators.cleaning import (
+    distinct_counts,
+    impute_mean,
+    impute_mode,
+)
 
 
 @pytest.fixture(scope="module")
@@ -59,6 +64,55 @@ def test_clean_flights_contract(spark, fixture_tables):
     df.unpersist()
 
 
+def _lazy_prune_and_impute(df, force_keep, mode_cols, mean_cols):
+    """The lazy composition the one-pass statistics replace: exact
+    distinct-count prune → impute_mode → impute_mean."""
+    counts = distinct_counts(df).first().asDict()
+    df = df.drop(*[c for c, n in counts.items()
+                   if n <= 1 and c not in force_keep])
+    df = impute_mode(df, [c for c in mode_cols if c in df.columns])
+    return impute_mean(df, [c for c in mean_cols if c in df.columns])
+
+
+def test_clean_flights_matches_lazy_composition(spark, monkeypatch):
+    """One-pass statistics with literal fills == the lazy
+    prune → mode → mean chain, row for row and type for type; the
+    cleaned plan stays narrow and ``prepare`` hands back a cached
+    frame."""
+    from bigdata_spark_assignment_spark.ml import flight_delay
+
+    raw = make_flights(spark, n=600, n_tails=200, seed=7)
+    planes = make_planes(spark, n=200, seed=7)
+    # NULL ("NA") dirt in the mode- and mean-imputed columns (Year is
+    # force-kept AND mode-imputed), plus one constant and one
+    # all-NA column for the prune
+    dirty = ("Year", "Month", "DayofMonth", "DayOfWeek", "DepTime",
+             "CRSDepTime", "CRSArrTime", "DepDelay", "Distance", "TaxiOut")
+    flights = raw.withColumns({
+        **{c: F.when(F.pmod(F.xxhash64("FlightNum", "TailNum", F.lit(c)),
+                            F.lit(6)) == 0, F.lit("NA")).otherwise(F.col(c))
+           for c in dirty},
+        "ConstCol": F.lit("k"), "DeadCol": F.lit("NA")}).cache()
+    new = clean_flights(flights, planes)
+    with monkeypatch.context() as m:
+        m.setattr(flight_delay, "prune_and_impute", _lazy_prune_and_impute)
+        ref = clean_flights(flights, planes)
+    assert new.dtypes == ref.dtypes
+    assert not {"ConstCol", "DeadCol"} & set(new.columns)
+    assert new.exceptAll(ref).count() == 0
+    assert ref.exceptAll(new).count() == 0
+    assert new.count() > 300
+
+    plan = new._jdf.queryExecution().optimizedPlan().toString()
+    for node in ("Expand", "Window", "Join Cross"):
+        assert node not in plan, plan
+
+    prepared = FlightDelayPipeline(cv_folds=2).prepare(flights, planes)
+    assert prepared.is_cached and prepared.storageLevel.useMemory
+    prepared.unpersist()
+    flights.unpersist()
+
+
 def test_featurize_produces_norm_vectors(spark, fixture_tables):
     flights, planes = fixture_tables
     df = featurize(clean_flights(flights, planes))
@@ -73,7 +127,7 @@ def test_featurize_produces_norm_vectors(spark, fixture_tables):
 def test_linear_regression_recovers_signal(spark, fixture_tables):
     flights, planes = fixture_tables
     pipe = FlightDelayPipeline(selector_mode="fdr", cv_folds=3)
-    prepared = pipe.prepare(flights, planes).cache()
+    prepared = pipe.prepare(flights, planes)
     metrics = pipe.fit_evaluate(prepared, models=("lr",))
     prepared.unpersist()
     # planted noise σ=8 over DepDelay σ≈25 ⇒ R² ≈ 1 - 64/689 ≈ 0.9;
@@ -87,7 +141,7 @@ def test_linear_regression_recovers_signal(spark, fixture_tables):
 def test_tree_models_run_and_beat_constant_baseline(spark, fixture_tables):
     flights, planes = fixture_tables
     pipe = FlightDelayPipeline(selector_mode=None, cv_folds=2)
-    prepared = pipe.prepare(flights, planes).cache()
+    prepared = pipe.prepare(flights, planes)
     metrics = pipe.fit_evaluate(prepared, models=("dtr", "rf"))
     prepared.unpersist()
     for name in ("dtr", "rf"):
@@ -131,7 +185,7 @@ def test_rf_golden_range_on_planted_signal(spark, fixture_tables):
     land materially above the constant baseline — band, not hash."""
     flights, planes = fixture_tables
     pipe = FlightDelayPipeline(selector_mode="fdr", cv_folds=2)
-    prepared = pipe.prepare(flights, planes).cache()
+    prepared = pipe.prepare(flights, planes)
     metrics = pipe.fit_evaluate(prepared, models=("rf",))
     prepared.unpersist()
     assert metrics["rf"]["r2"] > 0.3, metrics
@@ -166,7 +220,7 @@ def test_expo_shaped_metrics_discriminate_models(spark):
     flights = make_flights_expo(spark, n=60_000)
     planes = make_planes(spark, n=3000)
     pipe = FlightDelayPipeline(selector_mode="fdr", cv_folds=3)
-    prepared = pipe.prepare(flights, planes).cache()
+    prepared = pipe.prepare(flights, planes)
     metrics = pipe.fit_evaluate(prepared, models=("lr", "dtr", "rf"))
     prepared.unpersist()
     lr, dtr, rf = metrics["lr"], metrics["dtr"], metrics["rf"]

@@ -52,7 +52,7 @@ def main() -> None:
     for mode in ("fdr", "fwe"):
         pipe = FlightDelayPipeline(selector_mode=mode, cv_folds=folds)
         t0 = time.perf_counter()
-        prepared = pipe.prepare(flights, planes).cache()
+        prepared = pipe.prepare(flights, planes)
         n_rows = prepared.count()
         t_prep = time.perf_counter() - t0
         t0 = time.perf_counter()
