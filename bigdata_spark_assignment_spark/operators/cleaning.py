@@ -127,8 +127,8 @@ def prune_and_impute(df: DataFrame, force_keep: Sequence[str] = (),
     the input plan plus one projection — no cross join, window or
     second aggregation that each downstream action would re-run.
     Semantics match ``distinct_counts(df) <= 1`` → ``impute_mode`` →
-    ``impute_mean``: the mode breaks ties to the smaller value
-    (``mode(c, deterministic=true)``, as ``mode_of``), a column with no
+    ``impute_mean``: the mode is the value with the highest count, then
+    the smallest value (``mode(c, deterministic=true)``), a column with no
     non-null value keeps its NULLs, and a mean-imputed int column
     becomes ``double`` like ``coalesce(int, avg)``. ``mode_cols`` and
     ``mean_cols`` must be disjoint; pruned columns are not imputed.
@@ -174,23 +174,12 @@ def impute_mean(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return out.drop(*[f"__mean_{c}" for c in cols])
 
 
-def mode_of(df: DataFrame, col: str) -> DataFrame:
-    """A6: most frequent non-null value, ties broken by the smaller
-    value (deterministic — the reference's Imputer breaks ties
-    arbitrarily; we pin the semantics so an oracle can express it)."""
-    return (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(col).agg(F.count(F.lit(1)).alias("__n"))
-        .orderBy(F.col("__n").desc(), F.col(col).asc())
-        .limit(1)
-        .select(F.col(col).alias(f"__mode_{col}"))
-    )
-
-
 def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """A6/M1 (``Main.scala:262-267``): replace NULLs with each column's
-    mode (deterministic tie-break: highest count, then smallest value —
-    see ``mode_of``), ALL columns in one aggregation pipeline.
+    mode (deterministic tie-break: highest count, then smallest value;
+    the reference's Imputer breaks ties arbitrarily, we pin the
+    semantics so an oracle can express it), ALL columns in one
+    aggregation pipeline.
 
     Single-pass: rows explode to (column, value) pairs → one grouped
     count → one window pick per column → one global aggregate collapses
@@ -200,8 +189,8 @@ def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
     Values ride the pair frame as strings (Spark's casts round-trip
     for numeric/date/string types) but the tie-break orders by the
-    NATIVE value (numeric columns by double, others lexically), so
-    semantics match ``mode_of`` exactly. A column with zero non-null
+    NATIVE value (numeric columns by double, others lexically): highest
+    count, then smallest value. A column with zero non-null
     values yields a NULL mode and its NULLs are left in place — the
     1-row global aggregate cannot annihilate the crossJoin the way an
     empty per-column mode frame could.

@@ -199,7 +199,6 @@ def jaccard_expr(a: Column, b: Column) -> Column:
 def neardup_pairs_minhash(docs: DataFrame, id_col: str, text_col: str,
                           threshold: float = 0.6, k_shingle: int = 3,
                           num_hashes: int = 48, bands: int = 24,
-                          parallelism: int | None = None,
                           max_band_size: int | None = None) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold) via
     MinHash banding + exact verification.
@@ -210,9 +209,8 @@ def neardup_pairs_minhash(docs: DataFrame, id_col: str, text_col: str,
 
     The signature stage is the CPU hot spot (num_hashes × shingles
     interpreted hash evals per row) and is narrow — a small input file
-    would otherwise pin it to one task, so we repartition to
-    ``parallelism`` (default: the cluster's default parallelism)
-    before it.
+    would otherwise pin it to one task, so we repartition to the
+    cluster's default parallelism before it.
 
     100 TB path: `exploded` shuffles only (band_hash, id) pairs; the
     candidate join is equi on band hash; the verify join re-reads the
@@ -235,7 +233,7 @@ def neardup_pairs_minhash(docs: DataFrame, id_col: str, text_col: str,
     """
     rows = num_hashes // bands
     exclude_infer_filters_from_generate(docs.sparkSession)
-    n_parts = parallelism or docs.sparkSession.sparkContext.defaultParallelism
+    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     shingled = (docs
                 .select(F.col(id_col).alias("id"),
                         shingles_expr(F.col(text_col), k_shingle).alias("sh"))
@@ -432,8 +430,7 @@ def neardup_pairs_hamming64(sigs: DataFrame, id_col: str, sig_col: str,
 
 
 def neardup_pairs_simhash(docs: DataFrame, id_col: str, text_col: str,
-                          max_hamming: int = 6,
-                          parallelism: int | None = None) -> DataFrame:
+                          max_hamming: int = 6) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ max_hamming.
 
     Candidates: equality on any of the 4 16-bit chunks (pigeonhole-
@@ -445,7 +442,7 @@ def neardup_pairs_simhash(docs: DataFrame, id_col: str, text_col: str,
     """
     from .textual import words_expr
     exclude_infer_filters_from_generate(docs.sparkSession)
-    n_parts = parallelism or docs.sparkSession.sparkContext.defaultParallelism
+    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     simhash = _simhash_pandas_udf()
     # persist: the (id, sim) frame is tiny (two longs/row) and feeds
     # both self-join sides — without it the signature aggregate runs
@@ -459,11 +456,57 @@ def neardup_pairs_simhash(docs: DataFrame, id_col: str, text_col: str,
                                    max_hamming=max_hamming)
 
 
+# Per-round lineage cut interval of the iterative graph operators whose
+# per-round plan is shallow (pagerank, bfs_hops, sssp, kcore_membership).
+_CUT_EVERY = 3
+
+
+def _sym_edges(pairs: DataFrame) -> DataFrame:
+    """Symmetric closure of a pair frame: distinct directed (src, dst)
+    edges, one per orientation of every (id_a, id_b) pair."""
+    return (pairs.select(F.col("id_a").alias("src"),
+                         F.col("id_b").alias("dst"))
+            .unionByName(pairs.select(F.col("id_b").alias("src"),
+                                      F.col("id_a").alias("dst")))
+            .distinct())
+
+
+def _canonical_edges(pairs: DataFrame, lo: str = "u",
+                     hi: str = "v") -> DataFrame:
+    """Undirected edges of a pair frame as distinct (lo, hi) rows with
+    lo < hi; self-loops dropped."""
+    return (pairs.select(F.least("id_a", "id_b").alias(lo),
+                         F.greatest("id_a", "id_b").alias(hi))
+            .filter(F.col(lo) != F.col(hi))
+            .distinct())
+
+
+@contextlib.contextmanager
+def _lineage_cut(sc, checkpoint_dir: str | None):
+    """Yield the per-round lineage cut of an iterative graph operator.
+
+    With ``checkpoint_dir``: reliable ``checkpoint(eager=True)`` into
+    that directory, and the caller's checkpoint directory is restored
+    on exit — also when a round raises. Without it:
+    ``localCheckpoint(eager=True)``. Eager cuts won the measured A/B
+    against lazy ones (OPTIMIZATION_r12.md)."""
+    if checkpoint_dir is None:
+        yield lambda df: df.localCheckpoint(eager=True)
+        return
+    old_dir = sc.getCheckpointDir()
+    sc.setCheckpointDir(checkpoint_dir)
+    try:
+        yield lambda df: df.checkpoint(eager=True)
+    finally:
+        # Spark cannot UNSET a directory, so restoring is only defined
+        # when the caller had one
+        if old_dir is not None:
+            sc.setCheckpointDir(old_dir)
+
+
 def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
                      checkpoint_dir: str | None = None,
-                     round_stats: list | None = None,
-                     eager_checkpoint: bool = True,
-                     persist_edges: bool = True) -> DataFrame:
+                     round_stats: list | None = None) -> DataFrame:
     """Connected components over a near-dup pair graph → (id,
     cluster_id) with cluster_id = min id reachable through pairs.
 
@@ -480,8 +523,8 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
     the checkpoint instead of killing a multi-hour job, the property a
     100 TB run needs. Default is ``localCheckpoint`` (executor-local
     blocks: fastest, fine single-node or where re-running the job is
-    acceptable). The dir is set once per SparkContext and restored
-    after, so callers' checkpoint config is untouched.
+    acceptable). The caller's checkpoint directory is restored after,
+    so callers' checkpoint config is untouched.
 
     100 TB notes: each round is one join + one aggregate on the edge
     list (shuffle on vertex id). For web-scale or chain-shaped graphs
@@ -493,79 +536,46 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
     per-round plan wins. Only vertices that appear in SOME pair are
     returned — singletons are the caller's identity mapping.
     """
-    sc = pairs.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        old_dir = sc.getCheckpointDir()
-        sc.setCheckpointDir(checkpoint_dir)
+    import time
 
-        def _cut(df: DataFrame) -> DataFrame:
-            out = df.checkpoint(eager=True)
-            return out
-    else:
-        # r12 adjudication (VERDICT r11 #1): r11 shipped LAZY local
-        # checkpoints (one job per round instead of two) and the
-        # driver's scored run regressed q53 5.9→11.3s at local[32]
-        # with 0.71 anti-scaling. The r12 A/B matrix (tools/ab_cc.py,
-        # fresh JVM per cell, bench-shaped median-of-3, BOTH driver
-        # core counts) reads: eager wins every paired comparison —
-        # 32c lazy+persist 10.7s vs eager+persist 7.05s; 8c 9.07 vs
-        # 8.41 — so the default is eager again; the edge-list persist
-        # (the scale-evidenced half of the r11 change) stays.
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=eager_checkpoint)
-
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst")))
-             .distinct())
     # persist the (static) edge list across supersteps — the GraphX
     # discipline: without it every round's join re-runs the
-    # union+distinct shuffle from the pair graph (r11; at cluster
-    # scale that is one full edge shuffle per round saved).
-    # persist_edges=False restores the r10 recompute-per-round shape
-    # (the r12 A/B knob).
-    if persist_edges:
-        edges = _track_persist(edges)
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id")))
-    labels = _cut(labels)
-
+    # union+distinct shuffle from the pair graph
+    edges = _track_persist(_sym_edges(pairs))
     changed = 0
-    for _round in range(max_iter):
-        import time as _time
-        _t0 = _time.perf_counter()
-        neighbor_min = (edges.join(labels,
-                                   edges["dst"] == labels["id"])
-                        .groupBy("src")
-                        .agg(F.min("label").alias("nmin")))
-        # carry the previous label through the checkpoint so the
-        # convergence check is a filter+count on the checkpointed
-        # frame — not an extra join per round
-        new_labels = (labels.join(neighbor_min,
-                                  labels["id"] == neighbor_min["src"],
-                                  "left")
-                      .select(labels["id"],
-                              F.col("label").alias("__prev"),
-                              F.least(F.col("label"),
-                                      F.coalesce(F.col("nmin"),
-                                                 F.col("label")))
-                              .alias("label")))
-        new_labels = _cut(new_labels)
-        changed = new_labels.filter(
-            F.col("label") != F.col("__prev")).count()
-        labels = new_labels.select("id", "label")
-        if round_stats is not None:
-            # convergence-evidence hook (VERDICT r5 #9): rounds and
-            # per-round wall time, so the 100x extrapolation is
-            # arithmetic (rounds x per-round shuffle) not faith
-            round_stats.append({"round": _round + 1, "changed": changed,
-                                "seconds": round(_time.perf_counter()
-                                                 - _t0, 3)})
-        if changed == 0:
-            break
-    if checkpoint_dir is not None and old_dir is not None:
-        sc.setCheckpointDir(old_dir)
+    with _lineage_cut(pairs.sparkSession.sparkContext,
+                      checkpoint_dir) as cut:
+        labels = cut(edges.select(F.col("src").alias("id")).distinct()
+                     .withColumn("label", F.col("id")))
+        for _round in range(max_iter):
+            t0 = time.perf_counter()
+            neighbor_min = (edges.join(labels,
+                                       edges["dst"] == labels["id"])
+                            .groupBy("src")
+                            .agg(F.min("label").alias("nmin")))
+            # carry the previous label through the checkpoint so the
+            # convergence check is a filter+count on the checkpointed
+            # frame — not an extra join per round
+            new_labels = cut(
+                labels.join(neighbor_min,
+                            labels["id"] == neighbor_min["src"], "left")
+                .select(labels["id"],
+                        F.col("label").alias("__prev"),
+                        F.least(F.col("label"),
+                                F.coalesce(F.col("nmin"), F.col("label")))
+                        .alias("label")))
+            changed = new_labels.filter(
+                F.col("label") != F.col("__prev")).count()
+            labels = new_labels.select("id", "label")
+            if round_stats is not None:
+                # convergence-evidence hook (VERDICT r5 #9): rounds and
+                # per-round wall time, so the 100x extrapolation is
+                # arithmetic (rounds x per-round shuffle) not faith
+                round_stats.append({"round": _round + 1, "changed": changed,
+                                    "seconds": round(time.perf_counter()
+                                                     - t0, 3)})
+            if changed == 0:
+                break
     if changed != 0:
         # ADVICE r1: silent non-convergence returned wrong cluster_ids
         # with no signal when the graph diameter exceeded max_iter.
@@ -580,8 +590,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 20,
 
 def neardup_clusters_star(pairs: DataFrame, max_iter: int = 50,
                           checkpoint_dir: str | None = None,
-                          round_stats: list | None = None,
-                          eager_checkpoint: bool = True) -> DataFrame:
+                          round_stats: list | None = None) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., *Connected Components in MapReduce and Beyond*,
     SoCC'14) → (id, cluster_id) with cluster_id = min id in the
@@ -604,74 +613,54 @@ def neardup_clusters_star(pairs: DataFrame, max_iter: int = 50,
     per round: reliable ``checkpoint()`` when ``checkpoint_dir`` is
     given (cluster fault-tolerance), ``localCheckpoint`` otherwise.
     """
-    sc = pairs.sparkSession.sparkContext
-    old_dir = None
-    if checkpoint_dir is not None:
-        old_dir = sc.getCheckpointDir()
-        sc.setCheckpointDir(checkpoint_dir)
+    import time
 
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        # eager by default again (r12) — same adjudication as
-        # neardup_clusters above: the r11 lazy variant lost the
-        # driver-shaped A/B at both core counts (tools/ab_cc.py).
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=eager_checkpoint)
-
-    # Undirected edge set as (u, v) canonical pairs, self-loops dropped.
-    edges = (pairs.select(F.col("id_a").alias("u"),
-                          F.col("id_b").alias("v"))
-             .filter(F.col("u") != F.col("v"))
-             .select(F.greatest("u", "v").alias("u"),
-                     F.least("u", "v").alias("v"))
-             .distinct())
-    edges = _cut(edges)
     prev_sig: tuple | None = None
     converged = False
+    with _lineage_cut(pairs.sparkSession.sparkContext,
+                      checkpoint_dir) as cut:
+        # undirected edges oriented (u, v) = (big, small)
+        edges = cut(_canonical_edges(pairs, lo="v", hi="u"))
+        for _round in range(max_iter):
+            t0 = time.perf_counter()
+            # Large-star: for each node x, m = min(N(x) ∪ {x}); connect
+            # every STRICTLY LARGER neighbor to m. Keeps (big, small)
+            # orientation: emitted edges are (nbr, m) with nbr > x ≥ m.
+            sym = (edges.select("u", "v")
+                   .unionByName(edges.select(F.col("v").alias("u"),
+                                             F.col("u").alias("v"))))
+            mins = (sym.groupBy("u")
+                    .agg(F.least(F.min("v"), F.first("u")).alias("m")))
+            edges = (sym.join(mins, "u")
+                     .filter(F.col("v") > F.col("u"))
+                     .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                     .filter(F.col("u") != F.col("v"))
+                     .distinct())
+            # Small-star: edges are (u, v) with u > v; m = min(Γ⁻(u) ∪
+            # {u}) = min smaller-neighbor; connect u and every smaller
+            # neighbor except m itself to m.
+            mins = edges.groupBy("u").agg(F.min("v").alias("m"))
+            nbr_edges = (edges.join(mins, "u")
+                         .filter(F.col("v") != F.col("m"))
+                         .select(F.col("v").alias("u"),
+                                 F.col("m").alias("v")))
+            self_edges = mins.select("u", F.col("m").alias("v"))
+            edges = cut(nbr_edges.unionByName(self_edges).distinct())
+            # xor-fold, not sum: order-independent and cannot overflow
+            # under ANSI mode
+            sig = edges.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64("u", "v")).alias("h")).first()
+            sig = (sig["n"], sig["h"])
+            if round_stats is not None:
+                round_stats.append({"round": _round + 1, "edges": sig[0],
+                                    "seconds": round(time.perf_counter()
+                                                     - t0, 3)})
+            if sig == prev_sig:
+                converged = True
+                break
+            prev_sig = sig
 
-    for _round in range(max_iter):
-        import time as _time
-        _t0 = _time.perf_counter()
-        # Large-star: for each node x, m = min(N(x) ∪ {x}); connect
-        # every STRICTLY LARGER neighbor to m. Keeps (big, small)
-        # orientation: emitted edges are (nbr, m) with nbr > x ≥ m.
-        sym = (edges.select("u", "v")
-               .unionByName(edges.select(F.col("v").alias("u"),
-                                         F.col("u").alias("v"))))
-        mins = (sym.groupBy("u")
-                .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        edges = (sym.join(mins, "u")
-                 .filter(F.col("v") > F.col("u"))
-                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                 .filter(F.col("u") != F.col("v"))
-                 .distinct())
-        # Small-star: edges are (u, v) with u > v; m = min(Γ⁻(u) ∪
-        # {u}) = min smaller-neighbor; connect u and every smaller
-        # neighbor except m itself to m.
-        mins = edges.groupBy("u").agg(F.min("v").alias("m"))
-        nbr_edges = (edges.join(mins, "u")
-                     .filter(F.col("v") != F.col("m"))
-                     .select(F.col("v").alias("u"), F.col("m").alias("v")))
-        self_edges = mins.select("u", F.col("m").alias("v"))
-        edges = _cut(nbr_edges.unionByName(self_edges).distinct())
-        # xor-fold, not sum: order-independent and cannot overflow
-        # under ANSI mode
-        sig = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h")).first()
-        sig = (sig["n"], sig["h"])
-        if round_stats is not None:
-            round_stats.append({"round": _round + 1, "edges": sig[0],
-                                "seconds": round(_time.perf_counter()
-                                                 - _t0, 3)})
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-
-    if checkpoint_dir is not None and old_dir is not None:
-        sc.setCheckpointDir(old_dir)
     if not converged:
         import warnings
         warnings.warn(
@@ -875,7 +864,6 @@ def fuzzy_join_edit_distance(df: DataFrame, id_col: str, str_col: str,
 def pagerank(pairs: DataFrame, iters: int = 10, damping: float = 0.85,
              checkpoint_dir: str | None = None,
              broadcast_ranks: bool = False,
-             cut_every: int = 3,
              weight_col: str | None = None) -> DataFrame:
     """PageRank centrality over the UNDIRECTED pair graph → (id, rank)
     after exactly ``iters`` synchronous power iterations — e.g. to
@@ -902,7 +890,7 @@ def pagerank(pairs: DataFrame, iters: int = 10, damping: float = 0.85,
 
     100 TB notes: each round is one (edge ⋈ rank) shuffle on src plus
     one aggregate on dst — the degree-annotated edge list is built
-    once and persisted; checkpoints every ``cut_every`` rounds cut the
+    once and persisted; checkpoints every third round cut the
     lineage exactly as in ``neardup_clusters`` (same reliable-dir
     option, same driver-death failure mode without it; the per-round
     plan here is shallow enough that every-3rd suffices). N rides as a
@@ -915,24 +903,8 @@ def pagerank(pairs: DataFrame, iters: int = 10, damping: float = 0.85,
     join + one tiny aggregate exchange, no edge shuffle. Leave False
     when vertices themselves are web-scale (full link graphs).
     """
-    sc = pairs.sparkSession.sparkContext
-    old_dir = None
-    if checkpoint_dir is not None:
-        old_dir = sc.getCheckpointDir()
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
     if weight_col is None:
-        edges = (pairs.select(F.col("id_a").alias("src"),
-                              F.col("id_b").alias("dst"))
-                 .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                           F.col("id_a").alias("dst")))
-                 .distinct())
+        edges = _sym_edges(pairs)
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         edgesd = _track_persist(
             edges.join(deg, "src").select("src", "dst", "deg",
@@ -962,23 +934,23 @@ def pagerank(pairs: DataFrame, iters: int = 10, damping: float = 0.85,
     hint = F.broadcast if broadcast_ranks else (lambda df: df)
     ranks = (verts.crossJoin(F.broadcast(nstats))
              .select("id", (F.lit(1.0) / F.col("n")).alias("rank")))
-    for it in range(iters):
-        contrib = (edgesd.join(hint(ranks),
-                               edgesd["src"] == ranks["id"])
-                   .groupBy("dst")
-                   .agg(F.sum(contrib_num).alias("c")))
-        ranks = (verts.join(hint(contrib),
-                            verts["id"] == contrib["dst"], "left")
-                 .crossJoin(F.broadcast(nstats))
-                 .select(verts["id"],
-                         (teleport / F.col("n")
-                          + F.lit(damping)
-                          * F.coalesce(F.col("c"), F.lit(0.0)))
-                         .alias("rank")))
-        if (it + 1) % cut_every == 0 or it == iters - 1:
-            ranks = _cut(ranks)
-    if checkpoint_dir is not None and old_dir is not None:
-        sc.setCheckpointDir(old_dir)
+    with _lineage_cut(pairs.sparkSession.sparkContext,
+                      checkpoint_dir) as cut:
+        for it in range(iters):
+            contrib = (edgesd.join(hint(ranks),
+                                   edgesd["src"] == ranks["id"])
+                       .groupBy("dst")
+                       .agg(F.sum(contrib_num).alias("c")))
+            ranks = (verts.join(hint(contrib),
+                                verts["id"] == contrib["dst"], "left")
+                     .crossJoin(F.broadcast(nstats))
+                     .select(verts["id"],
+                             (teleport / F.col("n")
+                              + F.lit(damping)
+                              * F.coalesce(F.col("c"), F.lit(0.0)))
+                             .alias("rank")))
+            if (it + 1) % _CUT_EVERY == 0 or it == iters - 1:
+                ranks = cut(ranks)
     return ranks
 
 
@@ -1008,12 +980,7 @@ def pagerank_by_component(pairs: DataFrame, labels: DataFrame,
     over three long columns via Arrow.
     """
     if weight_col is None:
-        edges = (pairs.select(F.col("id_a").alias("src"),
-                              F.col("id_b").alias("dst"))
-                 .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                           F.col("id_a").alias("dst")))
-                 .distinct()
-                 .withColumn("w", F.lit(1.0)))
+        edges = _sym_edges(pairs).withColumn("w", F.lit(1.0))
     else:
         edges = (pairs.select(F.col("id_a").alias("src"),
                               F.col("id_b").alias("dst"),
@@ -1125,10 +1092,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     low-degree side first) bounds wedge counts, and near-dup graphs
     are small-component by construction.
     """
-    e = (pairs.select(F.least("id_a", "id_b").alias("u"),
-                      F.greatest("id_a", "id_b").alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct())
+    e = _canonical_edges(pairs)
     w1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     w2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
     wedges = w1.join(w2, "b")                       # a < b < c
@@ -1165,13 +1129,8 @@ def bfs_hops_by_component(pairs: DataFrame, labels: DataFrame,
     Returns (id, hops), hops ≤ ``max_hops`` (deeper vertices omitted —
     mirrored by the oracle's recursion bound).
     """
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst")))
-             .distinct())
     lab = labels.select(F.col("id").alias("src"), "cluster_id")
-    e = edges.join(lab, "src")
+    e = _sym_edges(pairs).join(lab, "src")
 
     def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
         seed = int(pdf["cluster_id"].iloc[0])
@@ -1198,7 +1157,7 @@ def bfs_hops_by_component(pairs: DataFrame, labels: DataFrame,
 
 
 def bfs_hops(pairs: DataFrame, seeds: DataFrame,
-             max_hops: int = 20, cut_every: int = 3) -> DataFrame:
+             max_hops: int = 20) -> DataFrame:
     """Distributed frontier-expansion BFS from an arbitrary seed set:
     per level, join the frontier to the edge table, anti-join out
     visited vertices, accumulate (id, hops). One shuffle join per
@@ -1209,15 +1168,10 @@ def bfs_hops(pairs: DataFrame, seeds: DataFrame,
     ``seeds`` is a 1-column (id) frame. Early-stops on an empty
     frontier (one cheap isEmpty action per level — unavoidable for
     data-dependent termination); lineage is cut with localCheckpoint
-    every ``cut_every`` levels, the same discipline as
+    every third level, the same discipline as
     ``neardup_clusters``' label iteration.
     """
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst")))
-             .distinct())
-    edges = _track_persist(edges)
+    edges = _track_persist(_sym_edges(pairs))
     visited = seeds.select(F.col("id").cast("long")) \
                    .withColumn("hops", F.lit(0).cast("long"))
     visited = visited.localCheckpoint(eager=True)
@@ -1227,12 +1181,12 @@ def bfs_hops(pairs: DataFrame, seeds: DataFrame,
                .select(F.col("dst").alias("id")).distinct()
                .join(visited.select("id"), "id", "left_anti")
                .withColumn("hops", F.lit(depth).cast("long")))
-        if depth % cut_every == 0:
+        if depth % _CUT_EVERY == 0:
             nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
             break
         visited = visited.unionByName(nxt)
-        if depth % cut_every == 0:
+        if depth % _CUT_EVERY == 0:
             visited = visited.localCheckpoint(eager=True)
         frontier = nxt.select("id")
     return visited
@@ -1296,8 +1250,7 @@ def sssp_by_component(pairs: DataFrame, labels: DataFrame,
 
 
 def sssp(pairs: DataFrame, seeds: DataFrame,
-         weight_col: str = "weight", max_rounds: int = 20,
-         cut_every: int = 3) -> DataFrame:
+         weight_col: str = "weight", max_rounds: int = 20) -> DataFrame:
     """Distributed hop-bounded Bellman-Ford from an arbitrary seed
     set: per round, relax every edge out of the current distance
     frame (one join), fold candidates into the running minimum (one
@@ -1306,8 +1259,8 @@ def sssp(pairs: DataFrame, seeds: DataFrame,
     one-job fast path — pinned equal in tests/test_dedup.py.
 
     Same semantics contract: min weight over ≤ ``max_rounds``-edge
-    paths. Lineage is cut with localCheckpoint every ``cut_every``
-    rounds (the ``neardup_clusters`` discipline); the per-round
+    paths. Lineage is cut with localCheckpoint every third
+    round (the ``neardup_clusters`` discipline); the per-round
     isEmpty improvement probe is the unavoidable action for
     data-dependent termination.
     """
@@ -1328,7 +1281,7 @@ def sssp(pairs: DataFrame, seeds: DataFrame,
                         (F.col("dist") + F.col("w")).alias("dist")))
         folded = (dist.unionByName(cand)
                   .groupBy("id").agg(F.min("dist").alias("dist")))
-        if rnd % cut_every == 0:
+        if rnd % _CUT_EVERY == 0:
             folded = folded.localCheckpoint(eager=True)
         improved = (folded.alias("n")
                     .join(dist.alias("o"), "id", "left")
@@ -1364,13 +1317,8 @@ def kcore_by_component(pairs: DataFrame, labels: DataFrame,
     (isolated vertices never appear — the pair graph has no
     degree-0 vertices).
     """
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst")))
-             .distinct())
     lab = labels.select(F.col("id").alias("src"), "cluster_id")
-    e = edges.join(lab, "src")
+    e = _sym_edges(pairs).join(lab, "src")
 
     def _run(pdf: "pd.DataFrame") -> "pd.DataFrame":
         adj: dict[int, set[int]] = {}
@@ -1399,7 +1347,6 @@ def kcore_by_component(pairs: DataFrame, labels: DataFrame,
 
 
 def kcore_membership(pairs: DataFrame, k: int, max_rounds: int = 8,
-                     cut_every: int = 3,
                      round_stats: list | None = None) -> DataFrame:
     """Distributed k-core: iteratively delete vertices whose degree
     within the surviving subgraph is < ``k`` until a fixpoint —
@@ -1417,19 +1364,14 @@ def kcore_membership(pairs: DataFrame, k: int, max_rounds: int = 8,
 
     Returns the 1-column (id) frame of k-core vertices.
     """
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst")))
-             .distinct())
-    edges = _track_persist(edges)
+    edges = _track_persist(_sym_edges(pairs))
     for rnd in range(1, max_rounds + 1):
         keep = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("__d"))
                 .filter(F.col("__d") >= k).select("src"))
         nxt = (edges.join(keep, "src", "left_semi")
                .join(keep.withColumnRenamed("src", "dst"), "dst",
                      "left_semi"))
-        if rnd % cut_every == 0:
+        if rnd % _CUT_EVERY == 0:
             nxt = nxt.localCheckpoint(eager=True)
         dropped = edges.join(nxt, ["src", "dst"], "left_anti")
         converged = dropped.isEmpty()
@@ -1560,12 +1502,7 @@ def label_propagation(pairs: DataFrame, rounds: int = 4) -> DataFrame:
     iteration; for dup-blob-sized components prefer
     :func:`lpa_by_component` (one job), pinned equal in pytest.
     """
-    adj = (pairs.select(F.col("id_a").alias("id"),
-                        F.col("id_b").alias("nbr"))
-           .unionByName(pairs.select(F.col("id_b").alias("id"),
-                                     F.col("id_a").alias("nbr")))
-           .distinct())
-    adj = _track_persist(adj)
+    adj = _track_persist(_sym_edges(pairs).toDF("id", "nbr"))
     labels = adj.select("id").distinct().withColumn("label", F.col("id"))
     for _ in range(rounds):
         nbr_lab = adj.join(
@@ -1591,13 +1528,8 @@ def lpa_by_component(pairs: DataFrame, component_labels: DataFrame,
     Right plan when components are dup-blob-sized; a giant component
     skews one task — use the iterative operator there.
     """
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst")))
-             .distinct())
     lab = component_labels.select(F.col("id").alias("src"), "cluster_id")
-    e = edges.join(lab, "src")
+    e = _sym_edges(pairs).join(lab, "src")
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         src = pdf["src"].to_numpy()
@@ -1644,15 +1576,9 @@ def modularity_nano(pairs: DataFrame, labels: DataFrame) -> DataFrame:
     aggregates and a label-domain-sized final combine. Returns one
     row (n_communities, m_edges, q_nano).
     """
-    lh = (pairs.select(F.least("id_a", "id_b").alias("u"),
-                       F.greatest("id_a", "id_b").alias("v"))
-          .filter(F.col("u") != F.col("v")).distinct())
-    deg = (pairs.select(F.col("id_a").alias("id"),
-                        F.col("id_b").alias("nbr"))
-           .unionByName(pairs.select(F.col("id_b").alias("id"),
-                                     F.col("id_a").alias("nbr")))
-           .distinct()
-           .groupBy("id").agg(F.count(F.lit(1)).alias("deg")))
+    lh = _canonical_edges(pairs)
+    deg = (_sym_edges(pairs).groupBy(F.col("src").alias("id"))
+           .agg(F.count(F.lit(1)).alias("deg")))
     la = labels.select(F.col("id").alias("u"), F.col("label").alias("cu"))
     lb = labels.select(F.col("id").alias("v"), F.col("label").alias("cv"))
     mc = (lh.join(la, "u").join(lb, "v")

@@ -863,7 +863,7 @@ def neardup_clusters_query(spark: SparkSession,
     ``q15_graph_extras`` (r8 de-overload — VERDICT r7 #5; iterative
     legs moved r8 session 2; renamed q78→q15 in the r10 rotation).
     """
-    legs = _graph_suite_legs(spark, sf_dir)
+    legs = _graph_suite_legs(spark, sf_dir, Q53_PARTS)
     out = legs[Q53_PARTS[0]]
     for t in Q53_PARTS[1:]:
         out = out.unionByName(legs[t])
@@ -894,16 +894,21 @@ def graph_extras_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded from bench.py (its legs would re-pay q53's shared
     subtrees; bench exclusion is independent of the prefix).
     """
-    legs = _graph_suite_legs(spark, sf_dir)
+    legs = _graph_suite_legs(spark, sf_dir, Q15_PARTS)
     out = legs[Q15_PARTS[0]]
     for t in Q15_PARTS[1:]:
         out = out.unionByName(legs[t])
     return out
 
 
-def _graph_suite_legs(spark: SparkSession,
-                      sf_dir: str) -> "dict[str, DataFrame]":
-    """Per-leg builders for the q53/q15 graph suites, tagged:
+def _graph_suite_legs(spark: SparkSession, sf_dir: str,
+                      parts: "tuple[str, ...]") -> "dict[str, DataFrame]":
+    """The q53/q15 graph-suite legs named in ``parts``, keyed by tag.
+
+    The MinHash pair graph and the ``prop`` component labels (the
+    grouping key of the per-component legs) are built once; then only
+    the requested legs are built, so q53 never plans the q15 analytics
+    and q15 never runs the eager ``star`` contraction. Tags:
 
     * ``prop`` / ``star`` — connected components via BOTH engines'
       algorithms: iterative min-label propagation
@@ -982,10 +987,12 @@ def _graph_suite_legs(spark: SparkSession,
     The pair graph is persisted so the MinHash sweep is paid once
     across all six algorithm families."""
     from ..operators.dedup import (
+        _sym_edges,
         _track_persist,
         bfs_hops_by_component,
         kcore_by_component,
         lpa_by_component,
+        modularity_nano,
         neardup_clusters,
         neardup_clusters_star,
         pagerank_by_component,
@@ -997,68 +1004,79 @@ def _graph_suite_legs(spark: SparkSession,
     pairs = _track_persist(
         neardup_pairs_minhash(docs, "doc_id", "text", threshold=0.6))
     prop = neardup_clusters(pairs)
-    star = neardup_clusters_star(pairs)
     nullv = F.lit(None).cast("double").alias("v")
-    # components are dup-cluster-sized -> the grouped one-job variant;
-    # prop's labels are already materialized, so the label join is free
-    pr = (pagerank_by_component(pairs, prop, iters=10, damping=0.85)
-          .select(F.lit("pagerank").alias("method"), "id",
-                  F.lit(None).cast("long").alias("cluster_id"),
-                  fround(F.col("rank"), 6).alias("v")))
-    tri_counts = triangle_counts(pairs)
-    tri = (tri_counts
-           .select(F.lit("triangles").alias("method"), "id",
-                   F.col("n_triangles").alias("cluster_id"), nullv))
-    # clustering: local clustering coefficient from the SAME triangle
-    # table + a distinct-neighbor degree count — how clique-ish each
-    # vertex's neighborhood is (1.0 = its near-dup blob is a clique)
-    sym = (pairs.select(F.col("id_a").alias("id"),
-                        F.col("id_b").alias("nb"))
-           .unionByName(pairs.select(F.col("id_b").alias("id"),
-                                     F.col("id_a").alias("nb")))
-           .distinct())
-    deg = sym.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
-    dd = F.col("deg").cast("double")
-    clus = (tri_counts.join(deg, "id")
+    want = set(parts)
+    legs: "dict[str, DataFrame]" = {}
+    if "prop" in want:
+        legs["prop"] = prop.select(F.lit("prop").alias("method"), "id",
+                                   "cluster_id", nullv)
+    if "star" in want:
+        legs["star"] = (neardup_clusters_star(pairs)
+                        .select(F.lit("star").alias("method"), "id",
+                                "cluster_id", nullv))
+    if "pagerank" in want:
+        # components are dup-cluster-sized -> the grouped one-job
+        # variant; prop's labels are already materialized, so the label
+        # join is free
+        legs["pagerank"] = (
+            pagerank_by_component(pairs, prop, iters=10, damping=0.85)
+            .select(F.lit("pagerank").alias("method"), "id",
+                    F.lit(None).cast("long").alias("cluster_id"),
+                    fround(F.col("rank"), 6).alias("v")))
+    if want & {"triangles", "clustering"}:
+        tri_counts = triangle_counts(pairs)
+    if "triangles" in want:
+        legs["triangles"] = tri_counts.select(
+            F.lit("triangles").alias("method"), "id",
+            F.col("n_triangles").alias("cluster_id"), nullv)
+    if "clustering" in want:
+        # local clustering coefficient from the SAME triangle table + a
+        # distinct-neighbor degree count — how clique-ish each vertex's
+        # neighborhood is (1.0 = its near-dup blob is a clique)
+        deg = (_sym_edges(pairs).groupBy(F.col("src").alias("id"))
+               .agg(F.count(F.lit(1)).alias("deg")))
+        dd = F.col("deg").cast("double")
+        legs["clustering"] = (
+            tri_counts.join(deg, "id")
             .select(F.lit("clustering").alias("method"), "id",
                     F.col("deg").cast("long").alias("cluster_id"),
                     F.when(F.col("deg") >= 2,
                            F.round(2.0 * F.col("n_triangles")
                                    / (dd * (dd - 1.0)), 6)).alias("v")))
-    kc = (kcore_by_component(pairs, prop, k_max=3)
-          .select(F.lit("kcore").alias("method"), "id",
-                  F.col("coreness").alias("cluster_id"), nullv))
-    bfs = (bfs_hops_by_component(pairs, prop, max_hops=20)
-           .select(F.lit("bfs").alias("method"), "id",
-                   F.col("hops").alias("cluster_id"), nullv))
-    weighted = pairs.withColumn(
-        "weight",
-        (F.lit(10001) - F.floor(F.col("jaccard") * 10000 + 0.5))
-        .cast("long"))
-    sp = (sssp_by_component(weighted, prop, max_rounds=20)
-          .select(F.lit("sssp").alias("method"), "id",
-                  F.col("dist").alias("cluster_id"), nullv))
-    # lpa: 4-round synchronous label propagation — community labels
-    # that split chain-bridged components where reachability cannot;
-    # grouped one-job form (components are dup-blob-sized), the
-    # iterative label_propagation pinned equal in tests/test_dedup.py
-    from ..operators.dedup import modularity_nano
-
-    lpa_lab = _track_persist(lpa_by_component(pairs, prop, rounds=4))
-    lpa = lpa_lab.select(F.lit("lpa").alias("method"), "id",
-                         F.col("label").alias("cluster_id"), nullv)
-    # modularity: did LPA find real structure? One nano-quantized
-    # number from three key-bounded aggregates over the same graph
-    mod = (modularity_nano(pairs, lpa_lab)
-           .select(F.lit("modularity").alias("method"),
-                   F.col("n_communities").alias("id"),
-                   F.col("q_nano").alias("cluster_id"),
-                   F.col("m_edges").cast("double").alias("v")))
-    nullv2 = F.lit(None).cast("double").alias("v")
-    return {"prop": prop.select(F.lit("prop").alias("method"), "id",
-                                "cluster_id", nullv2),
-            "star": star.select(F.lit("star").alias("method"), "id",
-                                "cluster_id", nullv2),
-            "pagerank": pr, "triangles": tri, "clustering": clus,
-            "kcore": kc, "bfs": bfs, "sssp": sp, "lpa": lpa,
-            "modularity": mod}
+    if "kcore" in want:
+        legs["kcore"] = (kcore_by_component(pairs, prop, k_max=3)
+                         .select(F.lit("kcore").alias("method"), "id",
+                                 F.col("coreness").alias("cluster_id"),
+                                 nullv))
+    if "bfs" in want:
+        legs["bfs"] = (bfs_hops_by_component(pairs, prop, max_hops=20)
+                       .select(F.lit("bfs").alias("method"), "id",
+                               F.col("hops").alias("cluster_id"), nullv))
+    if "sssp" in want:
+        weighted = pairs.withColumn(
+            "weight",
+            (F.lit(10001) - F.floor(F.col("jaccard") * 10000 + 0.5))
+            .cast("long"))
+        legs["sssp"] = (sssp_by_component(weighted, prop, max_rounds=20)
+                        .select(F.lit("sssp").alias("method"), "id",
+                                F.col("dist").alias("cluster_id"), nullv))
+    if want & {"lpa", "modularity"}:
+        # 4-round synchronous label propagation — community labels that
+        # split chain-bridged components where reachability cannot;
+        # grouped one-job form (components are dup-blob-sized), the
+        # iterative label_propagation pinned equal in tests/test_dedup.py
+        lpa_lab = _track_persist(lpa_by_component(pairs, prop, rounds=4))
+    if "lpa" in want:
+        legs["lpa"] = lpa_lab.select(F.lit("lpa").alias("method"), "id",
+                                     F.col("label").alias("cluster_id"),
+                                     nullv)
+    if "modularity" in want:
+        # did LPA find real structure? One nano-quantized number from
+        # three key-bounded aggregates over the same graph
+        legs["modularity"] = (
+            modularity_nano(pairs, lpa_lab)
+            .select(F.lit("modularity").alias("method"),
+                    F.col("n_communities").alias("id"),
+                    F.col("q_nano").alias("cluster_id"),
+                    F.col("m_edges").cast("double").alias("v")))
+    return legs

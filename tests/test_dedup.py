@@ -131,6 +131,8 @@ def test_neardup_clusters_reliable_checkpoint(spark, tmp_path):
     restored."""
     import os
 
+    from pyspark.errors import SparkRuntimeException
+
     from bigdata_spark_assignment_spark.operators.dedup import (
         neardup_clusters,
     )
@@ -152,6 +154,37 @@ def test_neardup_clusters_reliable_checkpoint(spark, tmp_path):
     # restored into the caller's tree (Spark nests a fresh UUID subdir
     # per setCheckpointDir, so compare by prefix)
     assert spark.sparkContext.getCheckpointDir().startswith(before)
+    # ... also when a round raises after the directory was switched
+    failing = pairs.withColumn(
+        "id_b", F.when(F.col("id_a") == 10, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id_b")))
+    with pytest.raises(SparkRuntimeException, match="boom"):
+        neardup_clusters(failing, checkpoint_dir=ckpt)
+    assert spark.sparkContext.getCheckpointDir().startswith(before)
+
+
+def test_graph_suite_builds_only_requested_legs(spark, sf_smoke,
+                                                monkeypatch):
+    """q53 and q15 share one leg builder; each must build only its own
+    legs. With the q15-only operators made to raise, q53 still builds;
+    with the star contraction made to raise, q15 still builds."""
+    from bigdata_spark_assignment_spark.operators import dedup
+    from bigdata_spark_assignment_spark.plans import REGISTRY
+
+    def boom(*args, **kwargs):
+        raise AssertionError("built a leg the query does not return")
+
+    with monkeypatch.context() as m:
+        for name in ("pagerank_by_component", "kcore_by_component",
+                     "bfs_hops_by_component", "sssp_by_component",
+                     "lpa_by_component", "modularity_nano"):
+            m.setattr(dedup, name, boom)
+        q53 = REGISTRY["q53_neardup_clusters"].fn(spark, sf_smoke)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "neardup_clusters_star", boom)
+        q15 = REGISTRY["q15_graph_extras"].fn(spark, sf_smoke)
+    assert q53.columns == q15.columns == ["method", "id", "cluster_id", "v"]
+    dedup.unpersist_dedup_caches()
 
 
 def test_neardup_clusters_star_matches_propagation(spark):
